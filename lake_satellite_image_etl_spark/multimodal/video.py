@@ -131,14 +131,24 @@ def video_frame_features(videos: DataFrame, every: int = SAMPLE_EVERY) -> DataFr
     return videos.mapInPandas(feats, schema=VIDEO_FRAME_SCHEMA)
 
 
-def with_videos(spark: SparkSession, sf_dir: str, max_id: int = 30) -> DataFrame:
-    """One synthetic clip per supplier row (bounded) — the opaque
-    binary column a real pipeline would read from object storage."""
-    ids = (
-        read_table(spark, sf_dir, "supplier")
-        .select(F.col("s_suppkey").cast("long").alias("entity_id"))
-        .filter(F.col("entity_id") <= max_id)
+#: clips are synthesized for entity ids 0..MAX_ID of the source table
+MAX_ID = 30
+
+
+def entity_ids(spark: SparkSession, sf_dir: str, table: str, key: str) -> DataFrame:
+    """The bounded id frame :func:`with_videos` reads: ``key`` of
+    ``table`` as ``entity_id``, ids <= MAX_ID. Each query names the
+    table its oracle draws ids from."""
+    return (
+        read_table(spark, sf_dir, table)
+        .select(F.col(key).cast("long").alias("entity_id"))
+        .filter(F.col("entity_id") <= MAX_ID)
     )
+
+
+def with_videos(ids: DataFrame) -> DataFrame:
+    """One synthetic clip per ``entity_id`` row of ``ids`` — the opaque
+    binary column a real pipeline would read from object storage."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -191,7 +201,8 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PREVIOUS sampled frame via the same formula shifted by the
     stride — and verifies the sampling + luminance + motion kernel
     exactly."""
-    return video_frame_features(with_videos(spark, sf_dir)).orderBy(
+    ids = entity_ids(spark, sf_dir, "supplier", "s_suppkey")
+    return video_frame_features(with_videos(ids)).orderBy(
         "entity_id", "frame_idx"
     )
 
@@ -327,7 +338,8 @@ def multimodal_video_shots(spark: SparkSession, sf_dir: str) -> DataFrame:
     islands) and multimodal_image_tiles (patchify): same plumbing —
     opaque binary column, vectorized Arrow kernel, no shuffle, full
     oracle; real codecs stay import-gated (decode_standard_video)."""
-    return video_shot_segments(with_videos(spark, sf_dir))
+    ids = entity_ids(spark, sf_dir, "part", "p_partkey")
+    return video_shot_segments(with_videos(ids))
 
 
 @query(
@@ -379,7 +391,7 @@ def multimodal_video_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: 1→4 fan-out inside the partition, no shuffle before
     the per-(clip, variant) summary rows."""
-    vids = with_videos(spark, sf_dir)
+    vids = with_videos(entity_ids(spark, sf_dir, "supplier", "s_suppkey"))
 
     def augment(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -27,3 +27,10 @@ def duck():
     from tools.compare import duckdb_con
 
     return duckdb_con(SF_ORACLE)
+
+
+@pytest.fixture(scope="session")
+def duck_smoke():
+    from tools.compare import duckdb_con
+
+    return duckdb_con(SF_SMOKE)

@@ -11,9 +11,10 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 from lake_satellite_image_etl_spark import registry
+from lake_satellite_image_etl_spark._window import WINDOW
 
 QUERIES, ORACLES = registry.load_all()
 
@@ -59,11 +60,19 @@ MUST_BE_NONEMPTY = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(name, spark, duck):
+#: every query at the oracle scale, plus the driver's window at the
+#: driver's smoke scale, where small dimension tables cover fewer keys
+CASES = [pytest.param(n, SF_ORACLE, id=n) for n in sorted(QUERIES)] + [
+    pytest.param(n, SF_SMOKE, id=f"{n}-smoke") for n in WINDOW
+]
+
+
+@pytest.mark.parametrize("name,sf_dir", CASES)
+def test_query_matches_oracle(name, sf_dir, spark, request):
     from tools.compare import compare_frames
 
-    spark_pdf = QUERIES[name](spark, SF_ORACLE).toPandas()
+    duck = request.getfixturevalue("duck" if sf_dir == SF_ORACLE else "duck_smoke")
+    spark_pdf = QUERIES[name](spark, sf_dir).toPandas()
     if name in MUST_BE_NONEMPTY:
         assert len(spark_pdf) > 0, f"{name} returned 0 rows (vacuous pass)"
     if name not in ORACLES:

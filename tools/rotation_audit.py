@@ -1,24 +1,27 @@
-"""Rotation-window audit — the staleness/SLA arithmetic the rotation
-policy (registry.py::_PRIORITY, standing policy restated r13) depends
-on, as a committed tool instead of a per-round hand derivation.
+"""Correctness-window tool. The driver's correctness gate checks
+``queries()`` in dict order and stops after the first 50 entries;
+this tool computes which 50 those should be and audits the window the
+registry presents.
 
-Reads CORRECTNESS_r*.json + the registry and reports:
+Reads CORRECTNESS_r*.json (the driver's per-round rows) and the
+registry. The next round is the highest round seen + 1. Every
+registered name is ranked by (class, latest driver round, name):
 
-1. the staleness histogram (latest driver round per entry);
-2. entries never driver-checked (must be next window's rule-2 heads);
-3. SLA state: with ``--next-round N``, which entries would BREACH the
-   6-round SLA if NOT in round N's window (i.e. latest <= N - 6);
-4. window audit: whether the registry's front-50 (the driver's
-   observed check cap) covers every would-breach entry and every
-   entry of the oldest due tier, plus the window's tier composition.
+- class 0: never driver-checked, or would breach the SLA (go more than
+  SLA_ROUNDS rounds without a driver row) if skipped next round;
+- class 1: listed in ``registry.TOUCHED`` (kernel changed since its
+  last driver row);
+- class 2: everything else, oldest round first.
 
 Usage:
-    python tools/rotation_audit.py [--next-round N] [--window 50]
+    python tools/rotation_audit.py          # audit: one JSON line
+    python tools/rotation_audit.py --write  # regenerate the window module
 
-With no --next-round, N defaults to (max seen round) + 1 — auditing
-the window the CURRENT registry order would present to the next
-driver run. Exit 1 if a would-breach or never-checked entry is
-missing from the window; 0 otherwise. Prints one JSON line.
+The audit exits 1 if a never-checked or would-breach entry is missing
+from the registry's first 50. ``--write`` writes the first 50 ranked
+names to ``lake_satellite_image_etl_spark/_window.py``; it exits 1 and
+writes nothing if classes 0 and 1 together exceed 50 or ``TOUCHED``
+names an unregistered query.
 """
 
 from __future__ import annotations
@@ -34,9 +37,11 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-#: the standing rotation policy's staleness bound (registry.py):
 #: no green entry goes more than this many rounds without a driver row
 SLA_ROUNDS = 6
+#: the driver's correctness gate checks this many queries() entries
+WINDOW_SIZE = 50
+WINDOW_PATH = os.path.join(REPO_ROOT, "lake_satellite_image_etl_spark", "_window.py")
 
 
 def load_latest_rounds() -> dict[str, int]:
@@ -53,23 +58,71 @@ def load_latest_rounds() -> dict[str, int]:
     return latest
 
 
+def compute_window(
+    names: list[str],
+    latest: dict[str, int],
+    touched: tuple[str, ...],
+    next_round: int,
+) -> list[str]:
+    """The first WINDOW_SIZE of ``names`` ranked by (class, latest
+    round, name). Raises ValueError if ``touched`` names a query not in
+    ``names`` or if classes 0 and 1 do not fit in the window."""
+    unknown = sorted(set(touched) - set(names))
+    if unknown:
+        raise ValueError(f"TOUCHED names unregistered queries: {unknown}")
+
+    def cls(n: str) -> int:
+        if n not in latest or next_round - latest[n] > SLA_ROUNDS:
+            return 0
+        return 1 if n in touched else 2
+
+    forced = sum(cls(n) < 2 for n in names)
+    if forced > WINDOW_SIZE:
+        raise ValueError(
+            f"{forced} due or touched queries exceed the {WINDOW_SIZE}-slot window"
+        )
+    return sorted(names, key=lambda n: (cls(n), latest.get(n, 0), n))[:WINDOW_SIZE]
+
+
+def write_window(window: list[str]) -> None:
+    body = "".join(f'    "{n}",\n' for n in window)
+    with open(WINDOW_PATH, "w") as f:
+        f.write(
+            "# Generated by `python tools/rotation_audit.py --write`; do not edit.\n"
+            f"WINDOW = (\n{body})\n"
+        )
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--next-round", type=int, default=None)
-    ap.add_argument("--window", type=int, default=50)
+    ap.add_argument(
+        "--write",
+        action="store_true",
+        help="regenerate lake_satellite_image_etl_spark/_window.py",
+    )
     args = ap.parse_args()
 
-    from lake_satellite_image_etl_spark.registry import load_all
+    from lake_satellite_image_etl_spark import registry
 
-    queries, oracles = load_all()
-    names = list(queries)
     latest = load_latest_rounds()
     max_round = max(latest.values(), default=0)
-    # `is not None`, not `or` (ADVICE r15): an explicit --next-round 0
-    # must audit round 0, not silently fall back to max_round + 1
-    next_round = (
-        args.next_round if args.next_round is not None else max_round + 1
-    )
+    next_round = max_round + 1
+    if args.write:
+        # registration order, not load_all(): a stale WINDOW naming a
+        # removed query must not block its own regeneration
+        registry.register_all()
+        try:
+            window = compute_window(
+                list(registry.QUERIES), latest, registry.TOUCHED, next_round
+            )
+        except ValueError as e:
+            print(f"rotation_audit: {e}; nothing written", file=sys.stderr)
+            return 1
+        write_window(window)
+        return 0
+
+    queries, oracles = registry.load_all()
+    names = list(queries)
 
     hist: dict[int, int] = {}
     for n in names:
@@ -88,7 +141,7 @@ def main() -> int:
         n for n in names if latest.get(n) == oldest_round
     )
 
-    window = names[: args.window]
+    window = names[:WINDOW_SIZE]
     wset = set(window)
     breach_missing = [n for n in would_breach if n not in wset]
     never_missing = [n for n in never if n not in wset]
@@ -114,8 +167,8 @@ def main() -> int:
         ),
         "sla_breach_entries_missing_from_window": breach_missing,
         "never_checked_missing_from_window": never_missing,
-        # informational, not gating: the oldest tier is usually DUE
-        # next-next round, so partial coverage is a planning choice
+        # informational, not gating: the oldest tier is usually due the
+        # round after next, so partial coverage is not a breach
         "oldest_tier": f"r{oldest_round}",
         "oldest_tier_missing_from_window": oldest_missing,
         "ok": not breach_missing and not never_missing,
