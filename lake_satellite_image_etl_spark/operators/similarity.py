@@ -18,7 +18,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import numpy as np
@@ -37,10 +37,52 @@ from lake_satellite_image_etl_spark.caching import (
 )
 from lake_satellite_image_etl_spark.functions.text import tok_hash60
 from lake_satellite_image_etl_spark.io import read_table
+from lake_satellite_image_etl_spark.operators.topk import topk_per_key
 from lake_satellite_image_etl_spark.registry import query
 
 TOP_K = 5
 QUERY_STRIDE = 53  # vec_id % 53 == 0 → ~10 query vectors at sf0.01
+
+
+def _side(n: DataFrame, role: str, *extra) -> DataFrame:
+    """Project a ``(vec_id, qv, nrm)`` frame as one side of a
+    candidate pair: ``role`` "query" gives ``query_id, q_qv, q_nrm``,
+    "candidate" gives ``candidate_id, c_qv, c_nrm``; ``extra``
+    columns follow."""
+    p = role[0]
+    return n.select(
+        F.col("vec_id").alias(f"{role}_id"),
+        F.col("qv").alias(f"{p}_qv"),
+        F.col("nrm").alias(f"{p}_nrm"),
+        *extra,
+    )
+
+
+def _pair_cos():
+    """Exact cosine of a query/candidate pair built from two ``_side``
+    projections: integer dot, one IEEE divide (the oracles' ops)."""
+    return dot_long(F.col("q_qv"), F.col("c_qv")).cast("double") / (
+        F.col("q_nrm") * F.col("c_nrm")
+    )
+
+
+def cosine_topk(pairs: DataFrame) -> DataFrame:
+    """Verify → top-k tail of the ANN family: score every candidate
+    pair by exact cosine and keep the TOP_K best per query (ties to
+    the lower candidate id). ``pairs`` holds both ``_side``
+    projections; returns ``(query_id, candidate_id, cos_sim, rank)``
+    with cos_sim rounded to 6 places, as every oracle does."""
+    scored = pairs.select(
+        "query_id", "candidate_id", _pair_cos().alias("cos_sim_exact")
+    )
+    return topk_per_key(
+        scored, "query_id", "cos_sim_exact", "candidate_id", TOP_K
+    ).select(
+        "query_id",
+        "candidate_id",
+        F.round("cos_sim_exact", 6).alias("cos_sim"),
+        "rank",
+    )
 
 
 def eval_sample_pred(id_col, den: int):
@@ -60,14 +102,13 @@ def eval_sample_pred(id_col, den: int):
 
 def sql_eval_sample_pred(col: str, den: int) -> str:
     """DuckDB twin of ``eval_sample_pred``, COMPOSED from
-    text.py::_sql_key_hash rather than restating it (r14 review:
-    the engine-critical md5-bucket recipe must live in one place —
-    two copies that drift would silently desynchronize Spark-vs-
-    DuckDB sampling between the two families). A sampled eval run is
+    text.py::_sql_key_hash rather than restating it: the
+    engine-critical md5-bucket recipe lives in one place, so Spark
+    and DuckDB sampling cannot drift apart. A sampled eval run is
     therefore fully oracle-checkable: the predicate is deterministic
     and SQL-expressible, which is what lets the sampled siblings of
     the n²-exact-side harnesses carry a complete DuckDB oracle
-    instead of a rows-only check (VERDICT r13 item 2)."""
+    instead of a rows-only check."""
     from lake_satellite_image_etl_spark.functions.text import (
         _sql_key_hash,
     )
@@ -98,7 +139,7 @@ DIM = 64
 EVAL_SAMPLE_CAP = 65536
 
 #: collect cap for dq_knn_recall_eval's FULL exact side (its corpus
-#: matrix broadcast, VERDICT r15 item 3): the full all-pairs graph is
+#: matrix broadcast): the full all-pairs graph is
 #: fixture-scale by contract — n² pair work makes it impractical long
 #: before the collect does — so past this the harness refuses loudly
 #: and names eval_sample_den, the sampled shape that ships at scale.
@@ -168,34 +209,10 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.select("vec_id", qvec_of(F.col("embedding")).alias("qv"))
     n = q.select("vec_id", "qv", norm(F.col("qv")).alias("nrm"))
-    queries = n.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qv").alias("q_qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cands = n.select(
-        F.col("vec_id").alias("candidate_id"),
-        F.col("qv").alias("c_qv"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    cos = dot_long(F.col("q_qv"), F.col("c_qv")).cast("double") / (
-        F.col("q_nrm") * F.col("c_nrm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim_exact"), F.asc("candidate_id")
-    )
-    return (
-        cands.join(
+    queries = _side(n.filter(F.col("vec_id") % QUERY_STRIDE == 0), "query")
+    return cosine_topk(
+        _side(n, "candidate").join(
             F.broadcast(queries), F.col("candidate_id") != F.col("query_id")
-        )
-        .select("query_id", "candidate_id", cos.alias("cos_sim_exact"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "candidate_id",
-            F.round("cos_sim_exact", 6).alias("cos_sim"),
-            "rank",
         )
     )
 
@@ -309,7 +326,7 @@ def similarity_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, memo_path=_emb_path(sf_dir))
 
 
-#: scale-geometry IVF dials (VERDICT r7 item 2): 2^5 sign-LSH
+#: scale-geometry IVF dials: 2^5 sign-LSH
 #: subcells per label → 320 cells (√n-ish for the smoke's 120 K
 #: corpus; the fixture holds 500 vectors, so the DEMONSTRATED probe
 #: fraction is n_probe/cells = 10% — vs ~50% for the 10-cell entry
@@ -320,9 +337,9 @@ IVF_SCALED_N_PROBE = 32
 
 
 def derive_seed_bits(n: int, n_labels: int) -> int:
-    """Cell-count dial DERIVED from corpus size (VERDICT r9 item 2):
-    cells should track √n for the classic n·√n inverted-list cost, so
-    with ``n_labels`` seed labels each splitting ``2^bits`` ways,
+    """Cell-count dial DERIVED from corpus size: cells should track
+    √n for the classic n·√n inverted-list cost, so with
+    ``n_labels`` seed labels each splitting ``2^bits`` ways,
     ``bits = ⌈log₂(√n / labels)⌉`` (clamped to [0, N_PLANES] — the
     sign-plane matrix caps the split at 2^{N_PLANES} subcells per
     label). A pinned bit count means n²/cells pair work grows
@@ -348,46 +365,27 @@ def derive_seed_bits(n: int, n_labels: int) -> int:
 #: fails loudly if the fixture ever drifts from it.
 IVF_AUTO_BITS_SF001 = 2
 
-_AUTO_BITS_MEMO_ATTR = "_lse_auto_bits_memo"
-
 
 def auto_seed_bits(spark: SparkSession, sf_dir: str) -> int:
-    """The derived-geometry dial for the registered autocell entries,
-    MEMOIZED per (session, embeddings-path stat) exactly like the
-    io.py schema memo (ADVICE r10): the √n derivation is one count
-    job that belongs to INDEX BUILD, not to every DataFrame
-    construction — plan-only tooling (explain audits, bench warm
-    passes) re-constructs entries many times per session and must not
-    pay a Spark job each time. The stat key (mtime_ns, size) means an
-    overwritten fixture path re-derives instead of silently reusing a
-    stale geometry; keeping ONE live entry per path (replace, don't
-    accumulate stat keys — ADVICE r11) bounds the memo in long-lived
-    sessions that rewrite tmp fixture dirs."""
-    import os
+    """The derived-geometry dial for the registered autocell entries:
+    ``derive_seed_bits`` over the corpus size and label count. The
+    count is one Spark job that belongs to index build, not to every
+    DataFrame construction, so it is memoized per (session,
+    embeddings path) by ``caching.memo_per_path`` — a rewritten
+    fixture, including a part file rewritten in place inside a
+    directory dataset, re-derives."""
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(path)
-        stat_key = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stat_key = None
-    memo = getattr(spark, _AUTO_BITS_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _AUTO_BITS_MEMO_ATTR, memo)
-    hit = memo.get(path)
-    if hit is None or hit[0] != stat_key:
-        q = (
+    def derive():
+        row = (
             read_table(spark, sf_dir, "embeddings")
             .select("label", qvec_of(F.col("embedding")).alias("qv"))
             .filter(F.col("qv").isNotNull())
+            .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("label").alias("l"))
+            .collect()[0]
         )
-        row = q.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("label").alias("l"),
-        ).collect()[0]
-        memo[path] = (stat_key, derive_seed_bits(row["n"], row["l"]))
-    return memo[path][1]
+        return derive_seed_bits(row["n"], row["l"])
+
+    return memo_per_path(spark, "auto_seed_bits", _emb_path(sf_dir), derive)
 
 
 @query(
@@ -468,10 +466,9 @@ def similarity_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def similarity_ivf_autocells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k with cell geometry DERIVED from corpus size
-    (VERDICT r9 item 2): ``seed_bits=None`` makes ``ivf_assign``
-    count the corpus once and size cells ≈ √n via
-    ``derive_seed_bits`` — at the oracle fixture that lands on
+    """ANN top-k with cell geometry DERIVED from corpus size:
+    ``auto_seed_bits`` counts the corpus once and sizes cells ≈ √n
+    via ``derive_seed_bits`` — at the oracle fixture that lands on
     {2 ** IVF_AUTO_BITS_SF001} subcells per label (40 cells); at the
     60× smoke it derives 6 bits (640 cells) with NO code change, so
     probe-fraction per query keeps shrinking as the corpus grows and
@@ -480,11 +477,10 @@ def similarity_ivf_autocells(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry ({IVF_AUTO_BITS_SF001} bits, pinned by the sync-guard
     test), so assignment, probe sets, and ranking are compared
     end-to-end; recall is floored alongside the other IVF entries in
-    tests/test_ann_recall.py. The derivation count is memoized per
-    (session, fixture stat) via ``auto_seed_bits`` — construction of
-    this DataFrame after the first touch pays no derivation job
-    (ADVICE r10; the Lloyd codebook collects remain, as for every
-    IVF entry — that is the training step)."""
+    tests/test_ann_recall.py. The derivation count and the trained
+    codebook are memoized per (session, fixture path), so
+    construction of this DataFrame after the first touch runs no
+    Spark job."""
     emb = read_table(spark, sf_dir, "embeddings")
     return ivf_topk(
         emb,
@@ -569,7 +565,7 @@ def similarity_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the smallest is 583 = 53·11, just past this fixture's 500
 #: vectors); self-overlap is handled by the explicit
 #: vec_id != query_id exclusion in BOTH the kernel and the oracle,
-#: not by any parity property of the predicate (ADVICE r12).
+#: not by any parity property of the predicate.
 ANN_FILTER_PRED_SPARSE = "vec_id % 16 = 7"
 
 
@@ -612,15 +608,15 @@ ANN_FILTER_PRED_SPARSE = "vec_id % 16 = 7"
 def similarity_ann_filtered_sparse(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Filtered ANN at ~6% predicate selectivity (VERDICT r11 item 6)
-    — the sibling of ``similarity_ann_filtered`` (~50%) that
-    demonstrates the regime pre-filtering exists for. With sparse
-    probe lists a query may legitimately return FEWER than
-    {TOP_K} rows (only the allowed candidates its probed cells hold);
-    a post-filter implementation would instead silently rank
-    non-qualifying vectors first and discard them — the recall test
-    pins both the predicate contract and recall vs the exact
-    filtered brute force at this selectivity."""
+    """Filtered ANN at ~6% predicate selectivity — the sibling of
+    ``similarity_ann_filtered`` (~50%) that demonstrates the regime
+    pre-filtering exists for. With sparse probe lists a query may
+    legitimately return FEWER than {TOP_K} rows (only the allowed
+    candidates its probed cells hold); a post-filter implementation
+    would instead silently rank non-qualifying vectors first and
+    discard them — the recall test pins both the predicate contract
+    and recall vs the exact filtered brute force at this
+    selectivity."""
     emb = read_table(spark, sf_dir, "embeddings")
     allowed = emb.filter(F.expr(ANN_FILTER_PRED_SPARSE)).select("vec_id")
     return ivf_topk(
@@ -710,10 +706,9 @@ def dq_ann_recall_eval(
     reduces via one union + pair-group + aggregate — no
     scalar-subquery cross joins in the Spark plan. Counts coalesce
     to 0 and recall NULLs on a degenerate corpus (no queries), the
-    same guard class as the dedup eval (ADVICE r11).
+    same guard class as the dedup eval.
 
-    Scale (VERDICT r12 item 3 — now a code path, not a docstring):
-    ground truth is |queries| × n — at 100 TB pass
+    Scale: ground truth is |queries| × n — at 100 TB pass
     ``eval_sample_den`` and the harness measures recall on the
     ~1/den deterministic md5-sampled SUBSET of the query set
     (``eval_sample_pred``). The predicate lands on ``query_id``,
@@ -777,13 +772,13 @@ def dq_ann_recall_eval(
     oracle=_sql_ann_recall_oracle(EVAL_SAMPLE_DEN_REGISTERED),
 )
 def dq_ann_recall_eval_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAMPLED ANN-recall eval as a driver-checked entry
-    (VERDICT r13 item 2): the query-side ``eval_sample_pred``
-    restriction is the plan that ships at 100 TB — exact-side pair
-    work shrinks ∝ the sample because Catalyst pushes the predicate
-    through the top-k window (partition key) into the broadcast
-    query side of both composed kernels — so the rotation
-    hash-verifies that plan every cycle, not only a pytest path.
+    """The SAMPLED ANN-recall eval as a driver-checked entry: the
+    query-side ``eval_sample_pred`` restriction is the plan that
+    ships at 100 TB — exact-side pair work shrinks ∝ the sample
+    because Catalyst pushes the predicate through the top-k window
+    (partition key) into the broadcast query side of both composed
+    kernels — so the rotation hash-verifies that plan every cycle,
+    not only a pytest path.
     Denominator pinned at {EVAL_SAMPLE_DEN_REGISTERED}; the
     md5-bucket predicate is SQL-expressible, so the sibling carries
     the same FULL DuckDB oracle, predicate-filtered on both sides.
@@ -934,15 +929,9 @@ def _emb_path(sf_dir: str) -> str:
     return os.path.join(sf_dir, "embeddings.parquet")
 
 
-#: session-attr memo for TRAINED codebook artifacts, keyed
-#: (fixture path, seed_bits) → ((mtime_ns, size), arrays); one live
-#: entry per key, stale stat replaced (the auto_seed_bits pattern)
-_CODEBOOK_MEMO_ATTR = "_lse_codebook_memo"
-
-
 def ivf_assign(
     emb: DataFrame,
-    seed_bits: int | None = 0,
+    seed_bits: int = 0,
     keep_ranks: int | None = None,
     train: DataFrame | None = None,
     memo_path: str | None = None,
@@ -977,30 +966,16 @@ def ivf_assign(
     downstream inverted-list ops are the classic n·√n cost instead of
     n²; more Lloyd rounds would chain the same two DataFrame blocks.
 
-    ``memo_path`` (VERDICT r11 item 4): when set (the fixture's
-    embeddings path) and ``train`` is None, the TRAINED codebook
-    arrays memoize per (session, path stat, seed_bits) exactly like
-    ``auto_seed_bits`` — training is a first-touch index-build event,
-    so repeated DataFrame construction (plan audits, bench warm
-    passes, the driver's schema probe) after the first touch runs
-    ZERO Spark jobs. The stat key re-trains on an overwritten path;
-    one live entry per (path, seed_bits)."""
+    ``memo_path``: when set (the embeddings path ``emb`` was read
+    from) and ``train`` is None, the TRAINED codebook arrays are
+    memoized per (session, path, seed_bits) by
+    ``caching.memo_per_path`` — training is a first-touch index-build
+    event, so repeated DataFrame construction (plan audits, bench
+    warm passes, the driver's schema probe) after the first touch
+    runs zero Spark jobs, and a rewritten path re-trains."""
     q = emb.select(
         "vec_id", "label", qvec_of(F.col("embedding")).alias("qv")
     ).filter(F.col("qv").isNotNull())
-    if seed_bits is None:
-        # derive cells ≈ √n from one cheap count — the index-build
-        # step of a real deployment. NOTE this runs the count at
-        # DataFrame-construction time; the REGISTERED entries
-        # (similarity_ivf_autocells, similarity_knn_graph) instead
-        # pass auto_seed_bits(spark, sf_dir) — the same derivation
-        # memoized per (session, fixture stat) so repeated
-        # construction is jobless (ADVICE r10)
-        stats = q.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("label").alias("l"),
-        ).collect()[0]
-        seed_bits = derive_seed_bits(stats["n"], stats["l"])
     if seed_bits:
         if seed_bits > N_PLANES:
             raise ValueError(
@@ -1121,14 +1096,11 @@ def ivf_assign(
                 order = _np.argsort(-cos, axis=1, kind="stable")[:, :kk]
                 rows = _np.repeat(_np.arange(b), kk)
                 cols = order.ravel()
-                # qv/nrm ride ALONG in the kernel output (r16, guide
-                # §2.4): the batch already holds them, so re-attaching
-                # them with a post-kernel equi-join on vec_id — which
-                # every consumer of the assignment then paid as a full
-                # shuffle of the vector table per action — is a free
-                # column copy here instead. keep ≤ n_probe bounds the
-                # duplication at n_probe vectors per input vector, and
-                # no exchange replaces a removed one.
+                # qv/nrm ride along in the kernel output: the batch
+                # already holds them, so consumers need no equi-join
+                # on vec_id (a full shuffle of the vector table) to
+                # re-attach them. keep ≤ n_probe bounds the
+                # duplication at n_probe vectors per input vector.
                 yield _pd.DataFrame(
                     {
                         "vec_id": pdf["vec_id"].to_numpy()[rows],
@@ -1150,55 +1122,37 @@ def ivf_assign(
             ),
         )
 
-    # trained-codebook memo (VERDICT r11 item 4): frozen-geometry
-    # registered entries pass memo_path so repeated construction
-    # after first touch reuses the collected arrays — zero jobs
-    memo = None
-    stat_key = None
-    art = None
-    if memo_path is not None and train is None:
-        import os as _os
-
-        memo = getattr(spark, _CODEBOOK_MEMO_ATTR, None)
-        if memo is None:
-            memo = {}
-            setattr(spark, _CODEBOOK_MEMO_ATTR, memo)
-        try:
-            st = _os.stat(memo_path)
-            stat_key = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            stat_key = None
-        hit = memo.get((memo_path, seed_bits))
-        if hit is not None and hit[0] == stat_key:
-            art = hit[1]
-    if art is None:
+    def train_codebook():
         # seed codebook: per-label integer sums; one Lloyd refinement:
         # nearest-seed assignment → recompute centroids per cell
-        cent0 = centroids(tq, "label")
         cells = (
-            assign(materialize(cent0), tn, keep=1)
+            assign(materialize(centroids(tq, "label")), tn, keep=1)
             .filter(F.col("crank") == 1)
             .select("vec_id", "qv", "c_label")
         )
-        art = materialize(centroids(cells, "c_label"))
-        if memo is not None:
-            memo[(memo_path, seed_bits)] = (stat_key, art)
+        return materialize(centroids(cells, "c_label"))
+
+    if memo_path is None or train is not None:
+        art = train_codebook()
+    else:
+        art = memo_per_path(
+            spark, f"ivf_codebook_bits{seed_bits}", memo_path, train_codebook
+        )
     return assign(art, n, keep=keep_ranks)
 
 
 def ivf_topk(
     emb: DataFrame,
-    seed_bits: int | None = 0,
+    seed_bits: int = 0,
     n_probe: int = N_PROBE,
-    query_stride: int = QUERY_STRIDE,
-    top_k: int = TOP_K,
     candidate_ids: DataFrame | None = None,
     memo_path: str | None = None,
 ) -> DataFrame:
-    """ANN top-k over a (vec_id, label, embedding) DataFrame, IVF
-    shape: ``ivf_assign`` codebook → inverted lists → probe the
-    n_probe nearest lists → exact re-rank. The parameterized kernel
-    behind similarity_ivf_probe.
+    """ANN top-TOP_K over a (vec_id, label, embedding) DataFrame, IVF
+    shape: ``ivf_assign`` codebook → inverted lists → the
+    QUERY_STRIDE query set probes its n_probe nearest lists →
+    ``cosine_topk`` re-rank. The parameterized kernel behind
+    similarity_ivf_probe.
 
     ``candidate_ids`` (one ``vec_id`` column) restricts the CANDIDATE
     side to a metadata predicate — filtered vector search, the
@@ -1215,55 +1169,28 @@ def ivf_topk(
     # plan-lazy persist: the ranked assignment feeds lists, probes
     # and the query-norm table — without it the codebook matmul
     # kernel (and its emb scan) re-runs once per consumer. persist
-    # (not localCheckpoint(eager=False), which was measured to run
-    # ONE Spark job at DataFrame construction even when lazy) keeps
-    # construction jobless after the codebook memo hit (VERDICT r11
-    # item 4); the bounded registry unpersists old frames.
+    # (not localCheckpoint(eager=False), which runs one Spark job at
+    # DataFrame construction even when lazy) keeps construction
+    # jobless after the codebook memo hit; the bounded registry
+    # unpersists old frames.
     assigned = persist_bounded(
         ivf_assign(emb, seed_bits, keep_ranks=n_probe, memo_path=memo_path)
     )
-    lists = assigned.filter(F.col("crank") == 1).select(
-        F.col("vec_id").alias("candidate_id"),
-        F.col("qv").alias("c_qv"),
-        F.col("nrm").alias("c_nrm"),
-        "c_label",
-    )
+    cells = assigned.filter(F.col("crank") == 1)
+    lists = _side(cells, "candidate", "c_label")
     if candidate_ids is not None:
         lists = lists.join(
             candidate_ids.select(F.col("vec_id").alias("candidate_id")),
             "candidate_id",
             "left_semi",
         )
-    probes = (
-        assigned.filter(
-            (F.col("crank") <= n_probe) & (F.col("vec_id") % query_stride == 0)
-        )
-        .select(F.col("vec_id").alias("query_id"), "c_label")
-    )
-    qn = assigned.filter(F.col("crank") == 1).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qv").alias("q_qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = dot_long(F.col("q_qv"), F.col("c_qv")).cast("double") / (
-        F.col("q_nrm") * F.col("c_nrm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim_exact"), F.asc("candidate_id")
-    )
-    return (
+    probes = assigned.filter(
+        (F.col("crank") <= n_probe) & (F.col("vec_id") % QUERY_STRIDE == 0)
+    ).select(F.col("vec_id").alias("query_id"), "c_label")
+    return cosine_topk(
         probes.join(lists, "c_label")
         .filter(F.col("candidate_id") != F.col("query_id"))
-        .join(F.broadcast(qn), "query_id")
-        .select("query_id", "candidate_id", cos.alias("cos_sim_exact"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "query_id",
-            "candidate_id",
-            F.round("cos_sim_exact", 6).alias("cos_sim"),
-            "rank",
-        )
+        .join(F.broadcast(_side(cells, "query")), "query_id")
     )
 
 
@@ -1274,8 +1201,8 @@ def _bucket_expr(qv, n_planes: int = N_PLANES):
     constant-folded by Catalyst."""
     # one F.expr per constant array: the 8×64 plane matrix spelled as
     # individual F.lit().cast() Columns costs ~1,500 py4j round-trips
-    # (~1.2 s of DRIVER time per fresh-session IVF construction —
-    # profiled r14); a single SQL string parses JVM-side in one call
+    # (~1.2 s of DRIVER time per fresh-session IVF construction);
+    # a single SQL string parses JVM-side in one call
     # and constant-folds to the identical Literal array
     planes = F.expr(
         "array("
@@ -1369,48 +1296,22 @@ def similarity_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm(F.col("qv")).alias("nrm"),
         _bucket_expr(F.col("qv")).alias("bucket"),
     )
-    queries = (
-        b.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("qv").alias("q_qv"),
-            F.col("nrm").alias("q_nrm"),
-            F.explode(
-                F.array(*[F.lit(d).cast("long") for d in PROBE_DELTAS])
-            ).alias("delta"),
-            "bucket",
-        )
-        .select(
-            "query_id",
-            "q_qv",
-            "q_nrm",
-            F.col("bucket").bitwiseXOR(F.col("delta")).alias("bucket"),
-        )
-    )
-    cands = b.select(
-        F.col("vec_id").alias("candidate_id"),
-        F.col("qv").alias("c_qv"),
-        F.col("nrm").alias("c_nrm"),
+    deltas = F.array(*[F.lit(d).cast("long") for d in PROBE_DELTAS])
+    queries = _side(
+        b.filter(F.col("vec_id") % QUERY_STRIDE == 0),
+        "query",
+        F.explode(deltas).alias("delta"),
         "bucket",
+    ).select(
+        "query_id",
+        "q_qv",
+        "q_nrm",
+        F.col("bucket").bitwiseXOR(F.col("delta")).alias("bucket"),
     )
-    cos = dot_long(F.col("q_qv"), F.col("c_qv")).cast("double") / (
-        F.col("q_nrm") * F.col("c_nrm")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim_exact"), F.asc("candidate_id")
-    )
-    return (
-        cands.join(F.broadcast(queries), "bucket")
+    return cosine_topk(
+        _side(b, "candidate", "bucket")
+        .join(F.broadcast(queries), "bucket")
         .filter(F.col("candidate_id") != F.col("query_id"))
-        .select("query_id", "candidate_id", cos.alias("cos_sim_exact"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "candidate_id",
-            F.round("cos_sim_exact", 6).alias("cos_sim"),
-            "rank",
-        )
     )
 
 
@@ -1477,49 +1378,35 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semantic_dedup_cells(
     emb: DataFrame,
     seed_bits: int = 0,
-    tau: float = SEMANTIC_DUP_TAU,
     memo_path: str | None = None,
 ) -> DataFrame:
     """The parameterized kernel behind ``dedup_semantic_cells``:
     ``seed_bits`` sizes the codebook (cells = labels × 2^seed_bits ≈
-    √n — within-cell pair work is then n·√n total), ``tau`` is the
-    duplicate bar; ``memo_path`` forwards to the shared codebook memo
-    so the registered entry trains first-touch-only (r13 — the last
-    Lloyd-training row left the construction-jobs allowlist)."""
+    √n — within-cell pair work is then n·√n total), the duplicate bar
+    is SEMANTIC_DUP_TAU; ``memo_path`` forwards to the shared codebook
+    memo so the registered entry trains first-touch-only."""
     assigned = ivf_assign(emb, seed_bits, keep_ranks=1, memo_path=memo_path)
     # compute the cell assignment ONCE: it feeds three consumers
     # (both self-join sides + the cell-size aggregate), and without the
     # cut Catalyst replays the whole two-phase codebook build per
-    # consumer (audited 28 exchanges → 4). Bounded lazy persist (r13;
-    # was an eager localCheckpoint, which billed a job to every
-    # plan-only construction); production would persist the
+    # consumer (28 exchanges instead of 4). A bounded lazy persist, not
+    # an eager localCheckpoint, which would bill a job to every
+    # plan-only construction; production would persist the
     # assignment as a table the ANN index also reads.
     lists = persist_bounded(
         assigned.filter(F.col("crank") == 1).select(
             "vec_id", "qv", "nrm", "c_label"
         )
     )
-    a = lists.select(
-        F.col("vec_id"),
-        F.col("qv").alias("a_qv"),
-        F.col("nrm").alias("a_nrm"),
-        "c_label",
-    )
-    b = lists.select(
-        F.col("vec_id").alias("b_vec_id"),
-        F.col("qv").alias("b_qv"),
-        F.col("nrm").alias("b_nrm"),
-        "c_label",
-    )
-    cos = dot_long(F.col("a_qv"), F.col("b_qv")).cast("double") / (
-        F.col("a_nrm") * F.col("b_nrm")
-    )
+    # query = the larger id of a within-cell pair, candidate = its
+    # keeper candidate (the smaller id)
     dups = (
-        a.join(b, "c_label")
-        .filter(F.col("b_vec_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .groupBy("vec_id")
-        .agg(F.min("b_vec_id").alias("keeper"))
+        _side(lists, "query", "c_label")
+        .join(_side(lists, "candidate", "c_label"), "c_label")
+        .filter(F.col("candidate_id") < F.col("query_id"))
+        .filter(_pair_cos() >= SEMANTIC_DUP_TAU)
+        .groupBy(F.col("query_id").alias("vec_id"))
+        .agg(F.min("candidate_id").alias("keeper"))
     )
     sizes = lists.groupBy("c_label").agg(F.count("*").alias("cell_size"))
     return (
@@ -1553,11 +1440,6 @@ PQ_K = 1 << PQ_BITS
 PQ_SCALE = 256
 #: ADC shortlist size fed to the exact re-rank stage.
 PQ_RERANK = 40
-
-# bounded lazy persist for the multi-consumer PQ codebook (ADVICE
-# r10): see caching.persist_bounded — newest frames stay cached,
-# evicted ones unpersist, construction stays jobless.
-_persist_bounded = persist_bounded
 
 
 def _pq_assign_salt(spark: SparkSession) -> int:
@@ -1714,14 +1596,13 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pq_adc_topk(
     emb: DataFrame,
     query_stride: int = QUERY_STRIDE,
-    rerank: int = PQ_RERANK,
-    top_k: int = TOP_K,
     router: DataFrame | None = None,
 ) -> DataFrame:
     """Parameterized PQ+ADC kernel behind ``similarity_pq_adc``:
     ``query_stride`` sizes the query set (the smoke drives a sparse
     stride at 60x vectors — the registered dense stride would mean
-    thousands of full-corpus compressed scans in one job).
+    thousands of full-corpus compressed scans in one job). The ADC
+    shortlist is PQ_RERANK deep; the exact re-rank keeps TOP_K.
 
     ``router``, when given, is a (query_id, candidate_id) DataFrame
     restricting WHICH candidates each query ADC-scores — the IVF-PQ
@@ -1732,15 +1613,14 @@ def pq_adc_topk(
         "vec_id", qvec_of(F.col("embedding")).alias("qv")
     ).filter(F.col("qv").isNotNull())
     # ---- seed-cell assignment: ONE numpy sign-matmul kernel -------
-    # History: the relational spelling went literal-arrays (512 copies
-    # of a 64-literal array in codegen, ~12 s of Janino) -> broadcast
-    # weight table with a 512-term scalar expression (fast steady-
-    # state but ~5 s of Janino compile at EVERY construction — expr
-    # ids differ per DataFrame, so the codegen cache never hits). The
-    # kernel form is the same trick ivf_assign uses for its codebook:
-    # the plane matrix is a plan-time constant, each Arrow batch does
-    # one integer einsum, and the sign bits are exact in int64 —
-    # equivalence pinned by the unchanged DuckDB oracle.
+    # Relational spellings cost Janino time: 512 copies of a
+    # 64-literal array compile for ~12 s, and a broadcast weight table
+    # with a 512-term scalar expression recompiles ~5 s at every
+    # construction (expr ids differ per DataFrame, so the codegen
+    # cache never hits). The kernel is the trick ivf_assign uses for
+    # its codebook: the plane matrix is a plan-time constant, each
+    # Arrow batch does one integer einsum, and the sign bits are exact
+    # in int64 — equivalence pinned by the DuckDB oracle.
     wmat = np.array(
         [
             [
@@ -1785,15 +1665,11 @@ def pq_adc_topk(
         )
         .localCheckpoint(eager=False)
     )
-    # ONE aggregation trains the codebook (r16, guide §2.3/§2.4): the
-    # former posexplode → groupBy(m, cell, pos) → join(counts) →
-    # groupBy(m, cell) + collect_list/array_sort spelling paid two
-    # extra shuffles, a join, and a per-group sort to reassemble what
-    # is simply PQ_SUB positional sums — sv is fixed-width, so
+    # ONE aggregation trains the codebook: sv is fixed-width, so
     # count + sum(sv[pos]) per position in a single partial-agg pass
-    # produces the identical truncated-mean centroid (same int64
-    # sums, same (s·SCALE) div n per component, same order by
-    # construction).
+    # gives the truncated-mean centroid (int64 sums, (s·SCALE) div n
+    # per component, in position order) with no posexplode, join or
+    # per-group sort.
     cent = (
         subs.groupBy("m", "cell")
         .agg(
@@ -1815,36 +1691,28 @@ def pq_adc_topk(
         )
         .withColumn("cn2", dot_long(F.col("cq"), F.col("cq")))
     )
-    cent = _persist_bounded(cent)
-    # NOTE persist(), NOT localCheckpoint(eager=False): under AQE a
+    cent = persist_bounded(cent)
+    # persist(), not localCheckpoint(eager=False): under AQE a
     # localCheckpoint materializes the frame's shuffle stages at
-    # CONSTRUCTION (toRdd finalizes query stages) — exactly the
-    # plan-time job leak r9 flagged. persist() is plan-lazy (zero
-    # jobs until the first action) and computes the ~PQ_M·PQ_K-row
-    # codebook once for its two consumers (code assignment + the
-    # per-query lookup tables). Identical re-constructions reuse one
-    # CacheManager entry (keyed by canonicalized plan), and DISTINCT
-    # sources can no longer accumulate unboundedly: _persist_bounded
-    # keeps the newest _PQ_CENT_MAX codebooks and unpersists evicted
-    # ones (ADVICE r10 — a long-lived shared session previously
-    # stacked one entry per sf_dir until someone called clearCache).
+    # construction (toRdd finalizes query stages). persist() is
+    # plan-lazy and computes the ~PQ_M·PQ_K-row codebook once for its
+    # two consumers (code assignment + the per-query lookup tables);
+    # identical re-constructions share one CacheManager entry, and
+    # persist_bounded caps how many distinct codebooks a long-lived
+    # session keeps cached.
     # ---- code assignment: salted-cogroup numpy argmax -------------
-    # (r10, VERDICT item 3) The previous form collected the trained
-    # codebook at DataFrame-CONSTRUCTION time — two Spark jobs before
-    # any action (plan-only tooling paid them on every explain) plus
-    # a Python broadcast that was never unpersisted and accumulated
-    # in shared sessions. The codebook now travels through the DATA
-    # PLANE instead of the driver: cogroup the subvector rows with
-    # the per-m codebook rows and run the same exact int64
-    # einsum-argmax per Arrow group. Construction runs ZERO jobs and
-    # nothing driver-held leaks. (A pure relational spelling —
-    # BroadcastHashJoin on m + max(struct) — was measured 2.05 s vs
-    # ~0.4 s for this kernel at sf0.1: the n·PQ_M·PQ_K row explosion
-    # through join machinery loses to one vectorized matmul per
-    # batch.) The salt bounds per-task rows to n·PQ_M/(PQ_M·SALT)
-    # and keeps parallelism at PQ_M·SALT tasks instead of PQ_M; the
-    # codebook side replicates per salt (≤ PQ_K tiny rows each), the
-    # classic replicate-the-small-side skew treatment. Exactness is
+    # The codebook travels through the data plane, not the driver:
+    # cogroup the subvector rows with the per-m codebook rows and run
+    # the exact int64 einsum-argmax per Arrow group, so construction
+    # runs zero jobs and holds no driver-side broadcast. (A pure
+    # relational spelling — BroadcastHashJoin on m + max(struct) —
+    # measured 2.05 s vs ~0.4 s for this kernel at sf0.1: the
+    # n·PQ_M·PQ_K row explosion through join machinery loses to one
+    # vectorized matmul per batch.) The salt bounds per-task rows to
+    # n·PQ_M/(PQ_M·SALT) and keeps parallelism at PQ_M·SALT tasks
+    # instead of PQ_M; the codebook side replicates per salt (≤ PQ_K
+    # tiny rows each), the classic replicate-the-small-side skew
+    # treatment. Exactness is
     # byte-identical to the oracle: integer dots are exact in int64,
     # the divide is one IEEE op, and numpy argmax over cell-sorted
     # columns reproduces `ORDER BY a DESC, cell` including NaN
@@ -1982,9 +1850,6 @@ def pq_adc_topk(
                 F.sum("cn2").cast("long").alias("rnorm2"),
             )
         )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_raw"), F.asc("candidate_id")
-    )
     scored = score.join(F.broadcast(qn_pq), "query_id").select(
         "query_id",
         "candidate_id",
@@ -1995,66 +1860,46 @@ def pq_adc_topk(
         ).alias("adc_raw"),
     )
     if route_cell:
-        # two-stage top-k (r17, guide §2.3): rank within each routed
-        # (query, IVF cell) list first and keep only its top-`rerank`
-        # — exact, because any row in the global per-query top-rerank
-        # has at most rerank−1 better rows overall, hence at most
-        # that many within its own cell, so it always survives the
-        # cell cut (ties are totally ordered by candidate_id, and all
-        # globally-better rows survive too, so adc_rank is unchanged).
+        # two-stage top-k: rank within each routed (query, IVF cell)
+        # list first and keep only its top PQ_RERANK — exact, because
+        # any row in the global per-query top PQ_RERANK has at most
+        # PQ_RERANK−1 better rows overall, hence at most that many
+        # within its own cell, so it always survives the cell cut
+        # (ties are totally ordered by candidate_id, and all
+        # globally-better rows survive too, so the shortlist rank is
+        # unchanged).
         # The global window's input drops from the probed-list mass
-        # (~n_probe·n/cells rows per query — at 100 TB one task per
-        # query over ~10% of the corpus) to ≤ n_probe·rerank rows per
-        # query, and the per-cell stage partitions by (query, cell) —
-        # n_probe× more, list-bounded partitions.
-        w_cell = Window.partitionBy("query_id", "c_label").orderBy(
-            F.desc("adc_raw"), F.asc("candidate_id")
-        )
-        scored = (
-            scored.withColumn("cell_rank", F.row_number().over(w_cell))
-            .filter(F.col("cell_rank") <= rerank)
-            .drop("cell_rank", "c_label")
-        )
-    shortlist = scored.withColumn(
-        "adc_rank", F.row_number().over(w_adc)
-    ).filter(F.col("adc_rank") <= rerank)
+        # (~n_probe·n/cells rows per query) to ≤ n_probe·PQ_RERANK
+        # rows per query, and the per-cell stage partitions by
+        # (query, cell) — n_probe× more, list-bounded partitions.
+        scored = topk_per_key(
+            scored, ["query_id", "c_label"], "adc_raw", "candidate_id", PQ_RERANK
+        ).drop("rank", "c_label")
+    shortlist = topk_per_key(scored, "query_id", "adc_raw", "candidate_id", PQ_RERANK)
     # exact re-rank of the PQ_RERANK-deep shortlist — the standard
     # refine stage: only queries x PQ_RERANK full vectors are touched,
     # the corpus scan above stayed compressed.
-    cand_full = q.select(
-        F.col("vec_id").alias("candidate_id"),
-        F.col("qv").alias("c_qv"),
-        norm(F.col("qv")).alias("c_nrm"),
+    n = q.select("vec_id", "qv", norm(F.col("qv")).alias("nrm"))
+    pairs = shortlist.join(_side(n, "candidate"), "candidate_id").join(
+        F.broadcast(_side(n, "query")), "query_id"
     )
-    query_full = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qv").alias("qq_qv"),
-        norm(F.col("qv")).alias("qq_nrm"),
-    )
-    w_ex = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_exact_raw"), F.asc("candidate_id")
-    )
-    return (
-        shortlist.join(cand_full, "candidate_id")
-        .join(F.broadcast(query_full), "query_id")
-        .select(
+    return topk_per_key(
+        pairs.select(
             "query_id",
             "candidate_id",
             "adc_raw",
-            (
-                dot_long(F.col("c_qv"), F.col("qq_qv")).cast("double")
-                / (F.col("c_nrm") * F.col("qq_nrm"))
-            ).alias("cos_exact_raw"),
-        )
-        .withColumn("rank", F.row_number().over(w_ex))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "query_id",
-            "candidate_id",
-            F.round("adc_raw", 6).alias("adc_cos"),
-            F.round("cos_exact_raw", 6).alias("cos_exact"),
-            "rank",
-        )
+            _pair_cos().alias("cos_exact_raw"),
+        ),
+        "query_id",
+        "cos_exact_raw",
+        "candidate_id",
+        TOP_K,
+    ).select(
+        "query_id",
+        "candidate_id",
+        F.round("adc_raw", 6).alias("adc_cos"),
+        F.round("cos_exact_raw", 6).alias("cos_exact"),
+        "rank",
     )
 
 
@@ -2070,47 +1915,39 @@ IVF_PQ_N_PROBE = IVF_SCALED_N_PROBE
 def ivf_pq_topk(
     emb: DataFrame,
     seed_bits: int = IVF_PQ_SEED_BITS,
-    n_probe: int = IVF_PQ_N_PROBE,
     query_stride: int = QUERY_STRIDE,
-    rerank: int = PQ_RERANK,
-    top_k: int = TOP_K,
     memo_path: str | None = None,
 ) -> DataFrame:
     """The production FAISS shape — IVF router over PQ-compressed
     lists: the coarse quantizer (``ivf_assign``) picks each query's
-    ``n_probe`` nearest cells, and ONLY the vectors in those lists are
-    ADC-scored against the query's lookup table, then exact-reranked
-    ``rerank`` deep. Per-query scan cost ∝ probed-list mass (compressed
-    codes, no full vectors) — never the corpus."""
+    IVF_PQ_N_PROBE nearest cells, and ONLY the vectors in those lists
+    are ADC-scored against the query's lookup table, then
+    exact-reranked PQ_RERANK deep. Per-query scan cost ∝ probed-list
+    mass (compressed codes, no full vectors) — never the corpus."""
     # plan-lazy persist: the router reads the assignment twice
     # (lists + probes); one materialization instead of two codebook
     # rank runs, with zero construction jobs (see ivf_topk)
     assigned = persist_bounded(
-        ivf_assign(emb, seed_bits, keep_ranks=n_probe, memo_path=memo_path)
+        ivf_assign(
+            emb, seed_bits, keep_ranks=IVF_PQ_N_PROBE, memo_path=memo_path
+        )
     )
     lists = assigned.filter(F.col("crank") == 1).select(
         F.col("vec_id").alias("candidate_id"), "c_label"
     )
     probes = assigned.filter(
-        (F.col("crank") <= n_probe) & (F.col("vec_id") % query_stride == 0)
+        (F.col("crank") <= IVF_PQ_N_PROBE)
+        & (F.col("vec_id") % query_stride == 0)
     ).select(F.col("vec_id").alias("query_id"), "c_label")
     router = (
         probes.join(lists, "c_label")
         .filter(F.col("candidate_id") != F.col("query_id"))
-        # c_label rides along (r17, guide §2.3 two-stage top-k): the
-        # ADC kernel pre-cuts each routed list to its per-(query,
-        # cell) top-`rerank` before the global per-query window, so
-        # the window input is bounded at n_probe·rerank rows per
-        # query instead of the probed-list mass
+        # c_label rides along so the ADC kernel can cut each routed
+        # list to its per-(query, cell) top PQ_RERANK before the
+        # global per-query window (the two-stage top-k there)
         .select("query_id", "candidate_id", "c_label")
     )
-    return pq_adc_topk(
-        emb,
-        query_stride=query_stride,
-        rerank=rerank,
-        top_k=top_k,
-        router=router,
-    )
+    return pq_adc_topk(emb, query_stride=query_stride, router=router)
 
 
 @query(
@@ -2236,21 +2073,21 @@ KNN_K = 3
 #: cells each vector PROBES for graph neighbors (its own cell plus
 #: the next ranks): multi-probe assignment — the recall patch for
 #: cross-cell near-neighbors that single-cell restriction misses by
-#: construction (VERDICT r9 item 1b). Probe work scales linearly in
-#: this dial: pair cost is n·KNN_PROBES·(n/cells). At the DERIVED
-#: √n cell geometry (VERDICT r10 item 1: 40 cells at the 500-vector
-#: fixture instead of the pinned 10) the fixture recall ladder is
+#: construction. Probe work scales linearly in this dial: pair cost
+#: is n·KNN_PROBES·(n/cells). At the DERIVED √n cell geometry (40
+#: cells at the 500-vector fixture instead of the pinned 10) the
+#: fixture recall ladder is
 #: 0.248 (2 probes) → 0.413 (4) → 0.525 (6) → 0.609 (8); 8 probes
 #: scan 20% of the corpus here — HALF the pinned-geometry entry's
 #: pair work (50k vs 100k candidate pairs) — and at production scale
 #: the probe COUNT stays put while cells track √n, so pair cost is
-#: n·8·√n, not 0.4·n². SYMMETRIZING the scored pair set (VERDICT r11
-#: item 2: every computed (q, v) also counts as a candidate for v —
+#: n·8·√n, not 0.4·n². SYMMETRIZING the scored pair set (every
+#: computed (q, v) also counts as a candidate for v —
 #: cosine is symmetric, so the reverse edge is FREE, no extra gram
 #: work, pair count unchanged) lifts fixture recall 0.609 → 0.807,
 #: above the pinned-geometry entry's 0.690 at half its pair work.
 KNN_PROBES = 8
-#: hot-cell OOM guard (VERDICT r9 item 1a): the per-cell gram is
+#: hot-cell OOM guard: the per-cell gram is
 #: computed in ROW BLOCKS of at most this many float64 elements
 #: (4M ≈ 32 MB), so one skewed/hot cell of m members costs
 #: O(block) memory instead of O(m²) in a single task. Exactness is
@@ -2258,7 +2095,7 @@ KNN_PROBES = 8
 #: column; only the row batching changes.
 KNN_GRAM_BLOCK_ELEMS = 4_000_000
 
-#: test hook (VERDICT r10 item 6): when a Spark accumulator is
+#: test hook: when a Spark accumulator is
 #: installed here (captured into the kernel closure at DataFrame
 #: construction), the kNN cell kernel adds the number of gram ROW
 #: BLOCKS it computed per cell — so a test can prove a hot/skewed
@@ -2280,8 +2117,8 @@ def _gram_int_exact(a, b_t, a_absmax=None, b_absmax=None):
     float64 BLAS when the exactness envelope holds — returns float64.
 
     numpy's int64 matmul gets no BLAS dispatch (generic C loops;
-    measured 6.1 s for a 2000×64 self-gram in the r13 driver bench —
-    VERDICT r13 item 1), while the float64 path is one dgemm call
+    measured 6.1 s for a 2000×64 self-gram), while the float64 path
+    is one dgemm call
     (~0.05 s). Exactness: inputs are quantized integer vectors
     (functions/vectors.py, |component| ≤ QUANT·|x|), so every
     product is ≤ amax·bmax and every partial sum ≤ d·amax·bmax;
@@ -2296,7 +2133,7 @@ def _gram_int_exact(a, b_t, a_absmax=None, b_absmax=None):
     fixed corpus/candidate matrix under row blocks, or the fixed
     broadcast sample matrix under Arrow batches), so the O(n·d) scan
     and its full-size abs() temp run once per matrix, not once per
-    batch (r14 review)."""
+    batch."""
     import numpy as _np
 
     amax = (
@@ -2309,10 +2146,10 @@ def _gram_int_exact(a, b_t, a_absmax=None, b_absmax=None):
         if b_absmax is None
         else float(b_absmax)
     )
-    # envelope check in EXACT Python integer arithmetic (ADVICE
-    # r14): the float64 product amax*bmax*d can itself round down a
-    # few ulps near 2^53 and admit a gram whose true bound is
-    # marginally above it. ceil, not int (ADVICE r15): int() truncates
+    # envelope check in EXACT Python integer arithmetic: the float64
+    # product amax*bmax*d can itself round down a few ulps near 2^53
+    # and admit a gram whose true bound is marginally above it.
+    # ceil, not int: int() truncates
     # toward zero, so a contract-violating FRACTIONAL max (inputs are
     # supposed to be integer-valued) would weaken the bound (2.9 → 2)
     # and could admit the inexact-float path for out-of-contract
@@ -2328,8 +2165,8 @@ def _topk_cols_stable(cos, kk):
     (value desc, column-index asc) order — bit-identical to
     ``np.argsort(-cos, axis=1, kind="stable")[:, :kk]`` but built on
     ``np.argpartition`` so the per-row cost is O(m + kk·log kk)
-    instead of a full O(m·log m) stable sort (the 15.2 s line of the
-    r13 dq_knn_recall_eval regression — VERDICT r13 item 1). Columns
+    instead of a full O(m·log m) stable sort (15.2 s of
+    dq_knn_recall_eval at sf0.1 when it was a full sort). Columns
     MUST be id-sorted by the caller (they are: every kernel sorts
     its batch by vec_id) so index-asc == id-asc.
 
@@ -2366,7 +2203,7 @@ def _topk_cols_stable(cos, kk):
         # slice minimum: `~(a < b)` (not `a == b`) so NaN — which
         # compares False to everything and sorts last like the
         # reference argsort, but lands arbitrarily in the partition
-        # slice — also routes to the exact full sort (r14 review)
+        # slice — also routes to the exact full sort
         unsafe = _np.flatnonzero(~(pvs[:, kk - 1] < pvs[:, pad - 1]))
         if unsafe.size:
             order[unsafe] = _np.argsort(
@@ -2472,7 +2309,7 @@ def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovers the cross-cell near-neighbors single-cell restriction
     misses by construction — a vector sitting on a cell boundary
     also scores the members of its runner-up cell — and
-    SYMMETRIZATION (VERDICT r11 item 2) recovers the rest of them
+    SYMMETRIZATION recovers the rest of them
     for free: every scored (q, v) pair is also a candidate for v
     (cosine is symmetric — the reverse edge costs zero extra gram
     work and leaves the candidate-pair count unchanged), which lifts
@@ -2486,21 +2323,20 @@ def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cos desc, id asc) order. Recall vs the exact graph is pinned in
     tests/test_ann_recall.py.
 
-    Scale shape (VERDICT r10 item 1 closed): the cell count is
+    Scale shape: the cell count is
     DERIVED ≈ √n from the corpus itself (``auto_seed_bits``, the
     memoized derivation shared with ``similarity_ivf_autocells``;
     the oracle bakes the fixture's derived {IVF_AUTO_BITS_SF001}
     bits, guarded by the sync test), so registered pair work is
-    n·{KNN_PROBES}·√n — sub-quadratic by construction, where the r9
-    pinned 10-cell dial made it ~0.4·n². One cell-assignment pass
+    n·{KNN_PROBES}·√n — sub-quadratic by construction, where a
+    pinned 10-cell dial makes it ~0.4·n². One cell-assignment pass
     (broadcast √n-row codebook, each vector emitting its
     top-{KNN_PROBES} cells), then one shuffle on the cell id groups
     members and probe rows together. Inside each cell the gram
-    matrix is
-    computed in ≤{KNN_GRAM_BLOCK_ELEMS}-element ROW BLOCKS, so a
-    hot cell costs bounded memory per task instead of O(m²) (the
-    r9-flagged OOM-at-skew risk); per-cell top-{KNN_K} lists then
-    merge to the global top-{KNN_K} in a per-vector window whose
+    matrix is computed in ≤{KNN_GRAM_BLOCK_ELEMS}-element ROW
+    BLOCKS, so a hot cell costs bounded memory per task instead of
+    O(m²) (no OOM at skew); per-cell top-{KNN_K} lists then merge to
+    the global top-{KNN_K} in a per-vector ``topk_per_key`` whose
     input is ≤ {KNN_PROBES}·{KNN_K} rows per vector."""
     emb = read_table(spark, sf_dir, "embeddings")
     assigned = ivf_assign(
@@ -2635,18 +2471,8 @@ def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = per_cell.groupBy("vec_id", "neighbor_id").agg(
         F.max("cos").alias("cos")
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        dedup.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cos_sim"),
-            "rank",
-        )
+    return topk_per_key(dedup, "vec_id", "cos", "neighbor_id", KNN_K).select(
+        "vec_id", "neighbor_id", F.round("cos", 6).alias("cos_sim"), "rank"
     )
 
 
@@ -2709,27 +2535,25 @@ def dq_knn_recall_eval(
     """kNN-GRAPH EVALUATION harness (fourth of the eval family):
     recall of the registered symmetrized multi-probe graph vs the
     exact all-pairs top-{KNN_K} graph, as one hash-verified row —
-    the measurement behind the r12 symmetrization story (fixture
-    recall 0.609 → 0.807 at unchanged pair work) now lives in the
-    driver contract instead of only a pytest floor. The graph side
-    is the registered kernel unchanged.
+    the measurement behind symmetrization (fixture recall 0.609 →
+    0.807 at unchanged pair work) lives in the driver contract, not
+    only in a pytest floor. The graph side is the registered kernel
+    unchanged.
 
-    Scale (VERDICT r12 item 3 — now a code path, not a docstring):
-    the exact side is n² over the corpus, so at 100 TB pass
+    Scale: the exact side is n² over the corpus, so at 100 TB pass
     ``eval_sample_den`` and recall is measured over the ~1/den
     deterministic md5-sampled subset of vectors
     (``eval_sample_pred``). The sampled exact side switches SHAPE:
     instead of the broadcast-corpus gram (bounded by
     EVAL_FULL_EXACT_CAP — right at fixture scale, wrong at 100 TB),
-    the collected
-    sample matrix (bounded by EVAL_SAMPLE_CAP) streams the full
-    candidate set through mapInPandas — per-Arrow-batch partial
-    top-k grams, then one global per-query top-k window over the
-    small partials — the distributed |sample| × n plan that ships at
-    any corpus size with memory bounded by (sample × batch); the
-    gram's int64-dot / IEEE-divide / id-stable-tie arithmetic is
-    reproduced exactly, so sampled rows are bitwise-comparable to
-    full rows over the shared subset. The
+    the collected sample matrix (bounded by EVAL_SAMPLE_CAP) streams
+    the full candidate set through mapInPandas — per-Arrow-batch
+    partial top-k grams, then one global per-query ``topk_per_key``
+    over the small partials — the distributed |sample| × n plan
+    that ships at any corpus size with memory bounded by (sample ×
+    batch); the gram's int64-dot / IEEE-divide / id-stable-tie
+    arithmetic is reproduced exactly, so sampled rows are
+    bitwise-comparable to full rows over the shared subset. The
     graph side filters to the same sampled vec_ids (a pushable
     narrow predicate — the production kernel is unchanged). Sampled
     recall is an unbiased estimate of the full number; the fixture
@@ -2749,22 +2573,19 @@ def dq_knn_recall_eval(
     # with the id-stable tie rule) — bit-identical to the oracle's
     # relational dot + IEEE divide, while ~40× cheaper than spelling
     # the 64-term dot per pair in codegen (measured 35 s → <2 s at
-    # sf0.1's 2 000 vectors / 4 M pairs, VERDICT r13 item 1).
+    # sf0.1's 2 000 vectors / 4 M pairs).
     if eval_sample_den is None:
-        # VERDICT r15 item 3: the former one-group applyInPandas gram
-        # was a SINGLE ~0.5 s numpy task, and a single-task stage is
-        # maximally exposed to per-core throttling — the r15
-        # adjudication measured the same stage at [1.55, 22.5, 0.76] s
-        # on consecutive identical runs. Now the id-sorted corpus
-        # matrix rides a broadcast (a bounded model artifact, memoized
-        # per path like the IVF codebook) while query rows stream
-        # through mapInPandas over a hash repartition, so the stage
-        # averages over cores like the graph side does. Per query row
-        # the arithmetic is unchanged — same gram against the same
-        # id-sorted corpus columns, same self-mask, same argpartition
-        # top-k — so the output SET is bit-identical to the one-group
-        # form (each row's neighbors never depended on which batch the
-        # row sat in). The full exact side stays fixture-scale by
+        # The id-sorted corpus matrix rides a broadcast (a bounded
+        # model artifact, memoized per path like the IVF codebook)
+        # while query rows stream through mapInPandas over a hash
+        # repartition, so the stage averages over cores. A one-group
+        # applyInPandas gram would be a single ~0.5 s numpy task, and
+        # a single-task stage is maximally exposed to per-core
+        # throttling (measured [1.55, 22.5, 0.76] s on consecutive
+        # identical runs). Each query row's neighbors depend only on
+        # the gram against the id-sorted corpus columns, the
+        # self-mask and the argpartition top-k, never on which batch
+        # the row sits in. The full exact side stays fixture-scale by
         # contract (n² pair work; the 100 TB shape is eval_sample_den)
         # and the collect cap makes that contract loud, not an OOM.
         def _corpus_matrix():
@@ -2868,7 +2689,7 @@ def dq_knn_recall_eval(
                 # (the REGISTERED _sampled sibling pins den=4 for the
                 # fixture-scale hash gate; production corpora past
                 # ~den·cap vectors call the base harness with a
-                # corpus-sized den — r14 review)
+                # corpus-sized den)
                 need = -(-len(qrows) * int(eval_sample_den) // EVAL_SAMPLE_CAP)
                 raise ValueError(
                     f"dq_knn_recall_eval: eval_sample_den={eval_sample_den} "
@@ -2878,7 +2699,7 @@ def dq_knn_recall_eval(
                 )
             if not qrows:
                 return None
-            # explicit broadcast (ADVICE r13): the cap-sized sample
+            # explicit broadcast: the cap-sized sample
             # matrix (~32 MB at EVAL_SAMPLE_CAP) ships once per
             # EXECUTOR via the torrent broadcast and is dereferenced
             # inside the generator — not captured in the closure,
@@ -2932,7 +2753,7 @@ def dq_knn_recall_eval(
                     c_ids = pdf["vec_id"].to_numpy()
                     # (n_queries, batch) cosine gram (f64 BLAS,
                     # exactness-checked), self masked; argpartition
-                    # top-k — same r13-regression fix as the full path
+                    # top-k, as on the full path
                     cos = _gram_int_exact(q_mat, c.T, a_absmax=q_absmax) / (
                         q_nrm[:, None] * c_nrm[None, :]
                     )
@@ -2951,14 +2772,9 @@ def dq_knn_recall_eval(
                 exact_partials,
                 schema="vec_id long, neighbor_id long, cos_ex double",
             )
-            w = Window.partitionBy("vec_id").orderBy(
-                F.desc("cos_ex"), F.asc("neighbor_id")
-            )
-            exact = (
-                partials.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= KNN_K)
-                .select("vec_id", "neighbor_id")
-            )
+            exact = topk_per_key(
+                partials, "vec_id", "cos_ex", "neighbor_id", KNN_K
+            ).select("vec_id", "neighbor_id")
             graph = (
                 similarity_knn_graph(spark, sf_dir)
                 .filter(pred)
@@ -3006,8 +2822,8 @@ def dq_knn_recall_eval(
     oracle=_sql_knn_recall_oracle(EVAL_SAMPLE_DEN_REGISTERED),
 )
 def dq_knn_recall_eval_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAMPLED kNN-recall eval as a driver-checked entry
-    (VERDICT r13 item 2): at 100 TB the shape that ships is the
+    """The SAMPLED kNN-recall eval as a driver-checked entry: at
+    100 TB the shape that ships is the
     ``eval_sample_den`` one — collected-sample query matrix
     broadcast into a distributed |sample| × n mapInPandas stream,
     NOT the broadcast-corpus gram — so the rotation should hash-verify that

@@ -2,7 +2,8 @@
 
 Global top-k never sorts globally: orderBy+limit compiles to
 TakeOrderedAndProject (per-partition heap + driver merge of k rows).
-Per-group top-k is one window over one shuffle on the group key.
+Per-group top-k is one window over one shuffle on the group key
+(``topk_per_key``, shared by every per-key cut in the engine).
 """
 
 from __future__ import annotations
@@ -12,6 +13,16 @@ from pyspark.sql import functions as F
 
 from lake_satellite_image_etl_spark.io import read_table
 from lake_satellite_image_etl_spark.registry import query
+
+
+def topk_per_key(df: DataFrame, key, score: str, tie: str, k: int) -> DataFrame:
+    """The ``k`` best rows per ``key`` (a column name or a list of
+    them): ``score`` descending, ties to the lower ``tie``, numbered
+    1..k in column ``rank``. Groups with fewer than k rows keep all
+    of them. One window over one shuffle on the key."""
+    keys = [key] if isinstance(key, str) else list(key)
+    w = Window.partitionBy(*keys).orderBy(F.desc(score), F.asc(tie))
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 @query(
@@ -50,11 +61,6 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     window row_number ≤ k — single shuffle on the group key; skewed
     groups split by AQE."""
     o = read_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
+    return topk_per_key(o, "o_custkey", "o_totalprice", "o_orderkey", 3).select(
+        "o_custkey", "o_orderkey", "o_totalprice"
     )

@@ -567,3 +567,59 @@ def test_knn_recall_eval_agrees_with_floor(spark, exact_graph_edges):
         numpy_recall,
     )
     assert r["graph_recall"] >= 0.75, r
+
+
+def test_memos_follow_in_place_part_rewrite(spark, tmp_path):
+    """Rewriting a part file in place inside a directory-form
+    ``embeddings.parquet`` leaves the directory's own stat unchanged.
+    The derived cell geometry and the trained IVF codebook, both
+    memoized per path, must still follow the new data."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lake_satellite_image_etl_spark.io import read_table
+    from lake_satellite_image_etl_spark.operators import similarity as S
+
+    sf_dir = str(tmp_path)
+    path = S._emb_path(sf_dir)
+    os.mkdir(path)
+    part = os.path.join(path, "part-0.parquet")
+    rng = np.random.default_rng(17)
+
+    def write(n):
+        vecs = rng.normal(size=(n, S.DIM))
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array(range(n), pa.int64()),
+                    "embedding": pa.array(
+                        [list(map(float, v)) for v in vecs],
+                        pa.list_(pa.float64()),
+                    ),
+                    "label": pa.array([0] * n, pa.int32()),
+                }
+            ),
+            part,
+        )
+
+    def assignment(**memo):
+        emb = read_table(spark, sf_dir, "embeddings")
+        return sorted(
+            tuple(r) for r in S.ivf_assign(emb, 2, keep_ranks=1, **memo).collect()
+        )
+
+    write(16)
+    assert S.auto_seed_bits(spark, sf_dir) == 2  # ⌈log₂(√16 / 1)⌉
+    assignment(memo_path=path)  # trains and memoizes the 16-vector codebook
+    before = os.stat(path)
+    write(256)
+    after = os.stat(path)
+    # the case under test: the directory entry itself did not change
+    assert (after.st_mtime_ns, after.st_size) == (
+        before.st_mtime_ns,
+        before.st_size,
+    )
+    assert S.auto_seed_bits(spark, sf_dir) == 4  # ⌈log₂(√256 / 1)⌉
+    assert assignment(memo_path=path) == assignment()

@@ -95,3 +95,31 @@ def test_registry_has_no_phantom_modules():
 
     for mod in registry._MODULES:
         import_module(mod)
+
+
+def test_compare_cli_rejects_unknown_names():
+    """A mistyped name list must fail before any query runs, naming
+    the unknown entries — not report ``0/0 passed`` and exit 0."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO_ROOT
+
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO_ROOT, "tools", "compare.py"),
+            "--sf-dir",
+            SF_SMOKE,
+            "topk_global",
+            "no_such_query",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode != 0
+    assert "no_such_query" in proc.stderr
+    assert "topk_global" not in proc.stderr
+    assert "passed" not in proc.stdout

@@ -1,15 +1,17 @@
-"""Bit-exactness contract of the r14 exact-kNN kernel helpers
-(VERDICT r13 item 1): `_gram_int_exact` (float64-BLAS integer gram
-behind a checked 2^53 exactness envelope) and `_topk_cols_stable` /
-`_topk_rows_idx` (argpartition top-k reproducing the full stable
-argsort's (value desc, id asc) tie rule). The helpers replaced the
-two lines that were 21.3 s of the r13 dq_knn_recall_eval regression;
-these tests pin that the replacements are BIT-IDENTICAL to the forms
-they replaced, including the adversarial cases the fast paths could
-get wrong: boundary ties wider than the partition pad, all-masked
-rows, and dot products outside the float64-exact envelope.
+"""Contract of the top-k kernels.
 
-Driver-side only; no Spark session.
+The numpy helpers of the exact-kNN kernels: `_gram_int_exact`
+(float64-BLAS integer gram behind a checked 2^53 exactness envelope)
+and `_topk_cols_stable` / `_topk_rows_idx` (argpartition top-k
+reproducing the full stable argsort's (value desc, id asc) tie rule).
+These tests pin that the fast paths are BIT-IDENTICAL to the plain
+forms, including the adversarial cases they could get wrong: boundary
+ties wider than the partition pad, all-masked rows, and dot products
+outside the float64-exact envelope. They run driver-side.
+
+`operators.topk.topk_per_key`, the Spark per-key top-k every ANN
+tail shares, is tested on a small frame through the session
+``spark`` fixture.
 """
 
 from __future__ import annotations
@@ -160,3 +162,33 @@ def test_gram_envelope_fractional_maxima_cannot_loosen_guard():
     b = np.array([[y]], dtype=np.int64)
     got = _gram_int_exact(a, b.T, a_absmax=frac, b_absmax=frac)
     assert got[0, 0] == float(np.int64(x) * np.int64(y))
+
+
+def test_topk_per_key_ties_short_groups_composite_key(spark):
+    from lake_satellite_image_etl_spark.operators.topk import topk_per_key
+
+    rows = [
+        # group (1, "a"): score tie at the 2nd place — lower tie wins
+        (1, "a", 0.9, 7),
+        (1, "a", 0.5, 4),
+        (1, "a", 0.5, 2),
+        (1, "a", 0.1, 1),
+        # group (1, "b"): fewer than k rows — all kept
+        (1, "b", 0.3, 9),
+        # group (2, "a"): same second key part, different first part
+        (2, "a", 0.2, 5),
+        (2, "a", 0.8, 6),
+    ]
+    df = spark.createDataFrame(rows, "g long, h string, s double, t long")
+    got = topk_per_key(df, ["g", "h"], "s", "t", 2).select("g", "h", "t", "rank")
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, "a", 2, 2),
+        (1, "a", 7, 1),
+        (1, "b", 9, 1),
+        (2, "a", 5, 2),
+        (2, "a", 6, 1),
+    ]
+    # single-column key, default rank column: the tie at k = 1
+    # resolves to the lowest tie value
+    one = topk_per_key(df.filter("s = 0.5"), "g", "s", "t", 1)
+    assert [(r["t"], r["rank"]) for r in one.collect()] == [(2, 1)]

@@ -201,6 +201,13 @@ def main() -> int:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    import __spark_entry__ as entrymod
+
+    # a mistyped name must fail loudly, not compare nothing and pass
+    unknown = sorted(set(args.names) - set(entrymod.queries()))
+    if unknown:
+        print(f"error: unknown query names: {', '.join(unknown)}", file=sys.stderr)
+        return 2
     results = run_all(args.sf_dir, only=args.names or None)
     n_ok = 0
     for r in results:
